@@ -122,9 +122,16 @@ def with_chunks(df: DataFrame, text_col: str = "text", max_chars: int = 2000) ->
     )
 
     def fn(batch_iter: Iterator["pandas.DataFrame"]) -> Iterator["pandas.DataFrame"]:  # noqa: F821
+        import pandas as pd
+
         for pdf in batch_iter:
             pdf = pdf.copy()
-            pdf["chunks"] = [chunk_paragraphs(t, max_chars) for t in pdf[text_col]]
+            # object-typed: an empty batch's bare list column is float64
+            pdf["chunks"] = pd.Series(
+                [chunk_paragraphs(t, max_chars) for t in pdf[text_col]],
+                index=pdf.index,
+                dtype=object,
+            )
             yield pdf
 
     return df.mapInPandas(fn, schema=f"{in_ddl}, chunks array<string>")

@@ -522,8 +522,14 @@ def _shingle_sized(spark, sf_dir):
                         )
                     )
                 )
-            out = pd.DataFrame({"doc_id": pd.Series(ids, dtype="int64")})
-            out["sh"] = shs
+            # object-typed: with no >=3-token doc in the batch a bare
+            # empty list column is float64, which Arrow cannot convert
+            out = pd.DataFrame(
+                {
+                    "doc_id": pd.Series(ids, dtype="int64"),
+                    "sh": pd.Series(shs, dtype=object),
+                }
+            )
             yield out
 
     _evict_stale(_SHINGLE_CACHE, spark)

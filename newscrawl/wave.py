@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import extract as ex
 from . import (
+    _fp_native,
     bucketing,
     canonicalize,
     dedupgate,
@@ -173,7 +174,10 @@ def run_wave(
     near-dup decisions in a ``near_dup_flags`` table; ``"drop"``
     additionally withholds flagged articles from the articles sink.
     Either way the kept articles' band rows append to ``minhash_bands``
-    atomically with the wave.
+    atomically with the wave. A gated wave's extract kernel also hashes
+    each page's band keys (extract.make_extract_kernel(band_keys=True)),
+    so the gate adds no Python pass; ungated waves run the plain
+    ``extract_pages``.
 
     ``media_sink=True`` adds the wave-level multimodal path: the fetched
     pages' raw payloads run through the typed-feature + resize-plan
@@ -321,10 +325,18 @@ def run_wave(
         for f in fetched.schema.fields
         if f.name != "html"
     )
-    kernel = (
-        ex.extract_pages if enrich_fn is None else ex.make_extract_kernel(enrich_fn)
-    )
-    ext_raw = fetched.mapInPandas(kernel, schema=f"{in_ddl}, {ex.EXTRACT_COLUMNS}")
+    out_ddl = f"{in_ddl}, {ex.EXTRACT_COLUMNS}"
+    if dedup_gate:
+        # the gate's MinHash band keys are hashed in THIS pass, which
+        # already holds every page's text, and land in the extracted
+        # cache — no second Python pass over the articles
+        kernel = ex.make_extract_kernel(enrich_fn, band_keys=True)
+        out_ddl += f", {ex.BAND_KEYS_COLUMN}"
+    elif enrich_fn is None:
+        kernel = ex.extract_pages
+    else:
+        kernel = ex.make_extract_kernel(enrich_fn)
+    ext_raw = fetched.mapInPandas(kernel, schema=out_ddl)
     # re-key with the SAME scheduler that ordered the candidates (the
     # broadcast carries only the six frontier columns; the key is a
     # deterministic projection, so recomputation equals selection)
@@ -405,15 +417,21 @@ def run_wave(
         # mode withhold them from the articles sink. seen/frontier
         # semantics are untouched — a near-dup url is still "seen" and
         # its outlinks still schedule (only the article sink dedups).
+        # The band keys come from the extract cache (band_keys column);
+        # wave_flags only plans here — its two writes run in the pool.
         if dedup_gate:
             prior_bands = (
                 catalog.read(spark, "minhash_bands", MINHASH_BANDS)
                 if catalog.table_stats("minhash_bands")
                 else None
             )
-            nd_flags, nd_kept_bands, _nd_cached = dedupgate.wave_flags(
+            # the keys come from the extract cache, so wave_flags
+            # persists nothing but the flags frame
+            nd_flags, nd_kept_bands, _ = dedupgate.wave_flags(
                 classified.select(
-                    "url", "text", F.col(priority.SORT_KEY).alias("sort_key")
+                    "url",
+                    "band_keys",
+                    F.col(priority.SORT_KEY).alias("sort_key"),
                 ),
                 prior_bands,
             )
@@ -428,7 +446,7 @@ def run_wave(
                     nd_flags.select("url"), "url", "left_anti"
                 )
         else:
-            nd_flags = nd_kept_bands = _nd_cached = _nd_flags_cached = None
+            nd_flags = nd_kept_bands = _nd_flags_cached = None
 
         # quality sink gate (audit-trailed): below-threshold articles go
         # to quality_flags instead of the articles table
@@ -461,19 +479,16 @@ def run_wave(
         new_frontier = carry.unionByName(children)
 
         # In DROP mode the articles sink depends on the flag decisions,
-        # so the gate must materialize (extract cache -> bands -> flags)
-        # BEFORE any write: two concurrent jobs racing an unfilled cache
-        # would each recompute the (md5-heavy) band kernel and the probe
-        # joins. In FLAG mode (and ungated) the articles frame does NOT
-        # depend on the flags, so the fused write below both fills the
-        # extract cache AND overlaps sink IO with extract CPU; the
-        # band/flag frames then materialize off the filled cache.
-        _gate_pre_fuse = _nd_cached is not None and dedup_gate == "drop"
-        if _gate_pre_fuse:
+        # so the gate must materialize (extract cache -> flags) BEFORE
+        # any write: two concurrent jobs racing an unfilled cache
+        # would each recompute the extract kernel and the probe. In FLAG
+        # mode (and ungated) the articles frame does NOT depend on the
+        # flags, so the fused write below both fills the extract cache
+        # AND overlaps sink IO with extract CPU; the gate then runs as
+        # one chained task of the commit pool, off the filled cache.
+        if dedup_gate == "drop":
             n_extracted = extracted.count()
             tick("extract(materialize)")
-            _nd_cached.count()
-            tick("dedup_gate(bands materialize)")
             nd_flags.count()
             tick("dedup_gate(flags materialize)")
         else:
@@ -686,15 +701,6 @@ def run_wave(
                 _w_art = _w_plan
             timed_write("articles", articles.coalesce(_w_art), "append")
             tick("extract+articles(fused)")
-            if _nd_cached is not None:
-                # flag-mode gate: bands + flag decisions materialize
-                # ONCE off the now-filled extract cache, before the
-                # write pool races them (drop mode took the pre-fuse
-                # path above instead)
-                _nd_cached.count()
-                tick("dedup_gate(bands materialize)")
-                nd_flags.count()
-                tick("dedup_gate(flags materialize)")
             n_extracted = extracted.count()  # cache is filled: cheap
 
         with ThreadPoolExecutor(max_workers=8) as pool:
@@ -803,16 +809,6 @@ def run_wave(
                 if media_sink
                 else None
             )
-            f_nd_flags = (
-                pool.submit(
-                    timed_write,
-                    "near_dup_flags",
-                    narrowed(nd_flags, 2),
-                    "append",
-                )
-                if nd_flags is not None
-                else None
-            )
             f_q_flags = (
                 pool.submit(
                     timed_write, "quality_flags", narrowed(q_flags, 2), "append"
@@ -820,25 +816,25 @@ def run_wave(
                 if q_flags is not None
                 else None
             )
-            f_nd_bands = (
-                pool.submit(
-                    timed_write,
+
+            def gate_writes() -> None:
+                # the near-dup gate as ONE chained task, overlapping the
+                # other commit jobs: the flags write fills the persisted
+                # flags frame, which the band append's anti-join then
+                # reads (submitted as two tasks, both would race to
+                # compute it)
+                timed_write("near_dup_flags", narrowed(nd_flags, 2), "append")
+                timed_write(
                     "minhash_bands",
-                    nd_kept_bands.select("url", "band", "key")
-                    .withColumn("wave_id", F.lit(wid))
-                    .transform(
-                        lambda d: write_narrowed(
-                            "minhash_bands",
-                            d,
-                            n_extracted
-                            * (dedupgate.N_BANDS if dedup_gate else 1),
-                        )
+                    write_narrowed(
+                        "minhash_bands",
+                        nd_kept_bands.withColumn("wave_id", F.lit(wid)),
+                        n_extracted * dedupgate.N_BANDS,
                     ),
                     "append",
                 )
-                if nd_kept_bands is not None
-                else None
-            )
+
+            f_gate = pool.submit(gate_writes) if nd_flags is not None else None
             # deletable tier: ONE job builds both accelerator artifacts
             # for this wave's delta — the cuckoo blob (serves the spill
             # window now) and the bloom bitmap (the precomputed fold
@@ -865,15 +861,12 @@ def run_wave(
                 f_hosts.result()
             if f_media is not None:
                 f_media.result()
-            if f_nd_flags is not None:
-                f_nd_flags.result()
-            if f_nd_bands is not None:
-                f_nd_bands.result()
+            if f_gate is not None:
+                f_gate.result()
             if f_q_flags is not None:
                 f_q_flags.result()
             accel_rows = f_accel.result() if f_accel is not None else None
-        if _nd_cached is not None:
-            _nd_cached.unpersist()
+        if _nd_flags_cached is not None:
             _nd_flags_cached.unpersist()
         tick("parallel writes+stats")
 
@@ -922,6 +915,10 @@ def run_wave(
             "topic_distribution": dim_dist("topic"),
             "sentiment_distribution": dim_dist("sentiment"),
         }
+        # which extract kernels ran (native or pure-Python fallback):
+        # snapshot-only, like extra_metrics, so a fallback is visible in
+        # scripts/inspect_catalog.py instead of silent
+        metrics.update(_fp_native.kernel_flags())
         if extra_metrics:
             # caller-supplied idempotence markers (e.g. the streaming
             # epoch id) ride the snapshot's metrics dict — committed

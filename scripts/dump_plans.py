@@ -306,22 +306,30 @@ def main() -> None:
         sections.append(
             (
                 "engine path: incremental near-dup gate probe "
-                "(semi-filter first, aggregate second)",
+                "(semi-filter first, one window + one aggregate second)",
                 "The persistent minhash_bands index (the FileScan below — "
-                "the 10^10-row side at web scale) feeds the "
-                "BroadcastHashJoin against the wave's distinct band keys "
-                "DIRECTLY: no Exchange, no HashAggregate touches unmatched "
-                "history. Only the matched rows (bounded by wave keys x "
-                "sharers) are aggregated to one representative per key "
-                "before the flag join. Output-identical to aggregating "
-                "first (min over prior holders of a shared key == min "
-                "over its sharers), but the history-side shuffle is gone — "
-                "asserted in test_plans.py::"
+                "the 10^10-row side at web scale) feeds a left-semi "
+                "BroadcastHashJoin against the wave's band keys DIRECTLY: "
+                "no Exchange, no HashAggregate touches unmatched history. "
+                "The matched rows (bounded by wave keys x sharers) union "
+                "with the wave's own band rows into ONE Window by "
+                "(band, key) — min prior url, min (sort_key, url) over the "
+                "wave's holders — and ONE aggregate by url (a "
+                "SortAggregate: the first-wins min is over a struct) "
+                "yields scope, matched_url and n_band_hits. "
+                "Output-identical to "
+                "aggregating first (min over prior holders of a shared key "
+                "== min over its sharers), but the history-side shuffle is "
+                "gone — asserted in test_plans.py::"
                 "test_dedup_gate_probe_broadcasts_new_side via an "
-                "ancestor walk from the prior scan to the probe join.",
+                "ancestor walk from the prior scan to the probe join. In a "
+                "gated wave the band keys are a column of the extract "
+                "cache (hashed in the extract pass); this standalone call "
+                "hashes them with the same kernel (the mapInPandas node).",
                 fmt(flags),
             )
         )
+        flags.unpersist()
         cached.unpersist()
 
     # past the broadcast bound (GATE_BROADCAST_MAX_KEYS ≈ 2.5M
@@ -343,13 +351,20 @@ def main() -> None:
         ],
         "url string, text string, sort_key string",
     )
-    flags2, _kept2, cached2 = dedupgate.wave_flags(
-        new2,
-        spark.table("newscrawl_plans_band_index"),
-        probe="bucketed",
-        bands_table="newscrawl_plans_band_index",
-        n_buckets=8,
-    )
+    # auto-broadcast off, as for the fetch join above: at demo size the
+    # planner would broadcast the wave's key table and skip the scale plan
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        flags2, _kept2, cached2 = dedupgate.wave_flags(
+            new2,
+            spark.table("newscrawl_plans_band_index"),
+            probe="bucketed",
+            bands_table="newscrawl_plans_band_index",
+            n_buckets=8,
+        )
+        plan2 = fmt(flags2)
+    finally:
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     sections.append(
         (
             "engine path: near-dup gate probe past the broadcast bound "
@@ -362,13 +377,17 @@ def main() -> None:
             "(dedupgate.write_band_index_bucketed) and the semi-filter "
             "plans as the SortMergeJoin below with NO Exchange on the "
             "history scan — co-located, the bucketing.py fetch-join "
-            "pattern. Both probe paths are output-identical "
+            "pattern (autoBroadcastJoinThreshold=-1 here, as in the "
+            "plan test). The window + aggregate above it are the same "
+            "as on the broadcast path. Both probe paths are "
+            "output-identical "
             "(test_dedupgate.py::test_bucketed_probe_matches_broadcast); "
             "the co-location is asserted in test_plans.py::"
             "test_dedup_gate_bucketed_probe_is_colocated.",
-            fmt(flags2),
+            plan2,
         )
     )
+    flags2.unpersist()
     cached2.unpersist()
 
     # static analysis sections (no plan dump needed — narrative + tables

@@ -285,7 +285,9 @@ def test_dedup_gate_bucketed_probe_is_colocated(spark, tmp_path):
     bucketed table and the wave's keys written with the same bucket
     spec, the semi-filter plans as a sort-merge join whose HISTORY side
     has NO Exchange between its scan and the join — co-located, the
-    bucketing.py fetch-join pattern."""
+    bucketing.py fetch-join pattern.  At test size the planner would
+    broadcast the tiny key table instead, so auto-broadcast is off here:
+    the probe join itself must be the co-located sort-merge join."""
     from newscrawl import dedupgate
 
     spark.sql("DROP TABLE IF EXISTS newscrawl_plan_band_index")
@@ -301,20 +303,45 @@ def test_dedup_gate_bucketed_probe_is_colocated(spark, tmp_path):
          ("https://h/new2", "epsilon zeta eta theta " * 16, "b")],
         "url string, text string, sort_key string",
     )
-    flags, _kept, cached = dedupgate.wave_flags(
-        new,
-        spark.table("newscrawl_plan_band_index"),
-        probe="bucketed",
-        bands_table="newscrawl_plan_band_index",
-        n_buckets=8,
-    )
-    plan = _plan(flags)
-    assert "SortMergeJoin" in plan
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        flags, _kept, cached = dedupgate.wave_flags(
+            new,
+            spark.table("newscrawl_plan_band_index"),
+            probe="bucketed",
+            bands_table="newscrawl_plan_band_index",
+            n_buckets=8,
+        )
+        plan = _plan(flags)
+    finally:
+        spark.conf.set(key, old)
+    # the probe is the flags plan's only join: it must be the sort-merge
+    assert "SortMergeJoin" in plan and "BroadcastHashJoin" not in plan, plan
     path = _ancestors_to_first_join(plan, "newscrawl_plan_band_index")
     assert not any(
         "Exchange" in n or "HashAggregate" in n for n in path
     ), f"history side shuffles before the co-located probe join: {path}\n{plan}"
+    flags.unpersist()
     cached.unpersist()
+
+
+def test_unprefixed_gate_table_name_raises(spark):
+    """The band-index writer only cleans up orphan directories inside
+    the ``newscrawl_`` table namespace; an unprefixed name must fail
+    loudly up front instead of later with LOCATION_ALREADY_EXISTS."""
+    import pytest
+
+    from newscrawl import dedupgate
+
+    bands = spark.createDataFrame(
+        [("https://h/0", 0, "k0", "w0000")],
+        "url string, band int, key string, wave_id string",
+    )
+    with pytest.raises(ValueError, match="newscrawl_"):
+        dedupgate.write_band_index_bucketed(bands, "plan_band_index", n_buckets=2)
+    assert not spark.catalog.tableExists("plan_band_index")
 
 
 def test_round6_cleaners_ride_the_scan(spark):

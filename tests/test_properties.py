@@ -104,6 +104,29 @@ def _band_keys_python_spec(text: str) -> set:
     return {(b, sig[2 * b] + sig[2 * b + 1]) for b in range(4)}
 
 
+def _band_kernels():
+    """(name, fn) for every band-key path this host can run: the
+    pure-Python fallback always, the native kernel when it loads."""
+    from newscrawl import _fp_native
+
+    paths = [("fallback", ex.minhash_band_keys)]
+    lib = _fp_native._load()
+    if lib:
+        paths.append(("native", lambda t: _fp_native._band_keys_with(lib, t)))
+    return paths
+
+
+def _assert_band_kernels_match_spec(text: str) -> None:
+    want = _band_keys_python_spec(text)
+    for name, fn in _band_kernels():
+        got = fn(text)
+        assert len(got) in (0, 4), name
+        assert set(enumerate(got)) == want, (name, text)
+
+
+_WS = st.sampled_from([" ", "  ", "\t", "\n", "\u00a0", "\u2003", "\x1c", "\u3000"])
+
+
 @given(
     st.lists(
         st.text(
@@ -115,37 +138,116 @@ def _band_keys_python_spec(text: str) -> set:
         ),
         min_size=0,
         max_size=40,
-    )
+    ),
+    st.lists(_WS, min_size=42, max_size=42),
 )
 @settings(max_examples=150, deadline=None)
-def test_gate_duckdb_kernel_matches_python_spec(words):
-    """The gate's DuckDB-vectorized band kernel must agree with the
-    pure-Python spec on ARBITRARY token sequences — not just the fixed
-    fixtures of test_band_spec_matches_batch_minhash.  Exercises the
-    in-kernel SQL directly (no Spark session needed)."""
-    import duckdb
-    import pandas as pd
+def test_gate_band_kernel_matches_python_spec(words, seps):
+    """The gate's band-key kernel — native C md5 AND its pure-Python
+    fallback — must agree with the independent spec above on ARBITRARY
+    token sequences, joined by assorted Unicode whitespace (edges
+    included: re.split keeps empty edge tokens, which the kernel's
+    str.split tokenizer must reproduce)."""
+    text = seps[0] + "".join(w + sep for w, sep in zip(words, seps[1:]))
+    _assert_band_kernels_match_spec(text)
 
-    text = " ".join(w for w in words if w)
-    want = _band_keys_python_spec(text)
 
-    toks = re.split(r"\s+", text.lower())
-    if len(toks) < 3:
-        assert want == set()
-        return
-    shingles = sorted(set(" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)))
-    sh = pd.DataFrame({"rid": ["d"] * len(shingles), "s": shingles})  # noqa: F841
-    from newscrawl.dedupgate import BAND_SQL_TEMPLATE, N_MINHASH
+def test_gate_band_kernel_degenerate_inputs():
+    """Fixed hazards for both band-key paths: empty / too-short texts
+    (no keys), U+017F (lowercases to itself, casefolds to 's'), CJK,
+    combining marks, and a shingle longer than 4 KB (multi-block md5)."""
+    for text in [
+        "",
+        "   ",
+        "one",
+        "one two",
+        " one two ",
+        "\u017f \u017fo \u017fa \u017f",
+        "\u65b0\u95fb \u722c\u866b \u6d4b\u8bd5 \u6570\u636e \u65b0\u95fb",
+        "Cafe\u0301 NAI\u0308VE \u0130stanbul stra\u00dfe",
+        "x" * 5000 + " y z " + "w" * 4097,
+    ]:
+        _assert_band_kernels_match_spec(text)
+    assert ex.minhash_band_keys("one two") == []
 
-    con = duckdb.connect()
-    con.execute("SET threads=1")
-    got = {
-        (r[1], r[2])
-        for r in con.execute(
-            BAND_SQL_TEMPLATE.format(n_md5=N_MINHASH // 4, id_col="url")
-        ).fetchall()
-    }
-    assert got == want
+
+def _gate_spec(wave, prior):
+    """Pure-Python near-dup gate: wave = [(url, text, sort_key)], prior =
+    [(url, band, key)] -> ({url: (matched_url, n_band_hits, scope)},
+    kept (url, band, key) set)."""
+    from collections import defaultdict
+
+    keys = {u: set(enumerate(ex.minhash_band_keys(t))) for u, t, _s in wave}
+    prior_min: dict = {}
+    for u, b, k in prior:
+        prior_min[(b, k)] = min(prior_min.get((b, k), u), u)
+    first = defaultdict(list)
+    for u, _t, s in wave:
+        for bk in keys[u]:
+            first[bk].append((s, u))
+    flags = {}
+    for u, _t, s in wave:
+        p = [bk for bk in keys[u] if bk in prior_min]
+        if p:
+            flags[u] = (min(prior_min[bk] for bk in p), len(p), "prior_wave")
+            continue
+        same = [min(first[bk]) for bk in keys[u] if min(first[bk]) < (s, u)]
+        if same:
+            flags[u] = (min(same)[1], len(same), "same_wave")
+    kept = {(u, b, k) for u, ks in keys.items() if u not in flags for b, k in ks}
+    return flags, kept
+
+
+_GATE_TEXTS = [
+    "alpha beta gamma delta",
+    "alpha beta gamma delta epsilon",
+    "zeta eta theta iota",
+    "one two",
+    "",
+]
+
+
+@given(
+    st.lists(
+        st.tuples(
+            st.integers(0, len(_GATE_TEXTS) - 1), st.sampled_from(["a", "b"])
+        ),
+        min_size=1,
+        max_size=8,
+    ),
+    st.lists(st.integers(0, len(_GATE_TEXTS) - 1), max_size=3),
+    st.booleans(),
+)
+@settings(max_examples=12, deadline=None)
+def test_gate_wave_flags_match_python_spec(spark, docs, prior_docs, with_prior):
+    """The one-window wave_flags equals the pure-Python gate on small
+    waves drawn from a 5-text pool (so keys collide), with sort_key ties
+    (url breaks them), with and without a prior index."""
+    from newscrawl import dedupgate
+
+    wave = [(f"https://h/{i}", _GATE_TEXTS[t], sk) for i, (t, sk) in enumerate(docs)]
+    prior = [
+        (f"https://p/{i}", b, k)
+        for i, t in enumerate(prior_docs)
+        for b, k in enumerate(ex.minhash_band_keys(_GATE_TEXTS[t]))
+    ]
+    want_flags, want_kept = _gate_spec(wave, prior if with_prior else [])
+    new = spark.createDataFrame(wave, "url string, text string, sort_key string")
+    prior_df = (
+        spark.createDataFrame(
+            [r + ("w0000",) for r in prior],
+            "url string, band int, key string, wave_id string",
+        )
+        if with_prior
+        else None
+    )
+    flags, kept, cached = dedupgate.wave_flags(new, prior_df)
+    got = {r.url: (r.matched_url, r.n_band_hits, r.scope) for r in flags.collect()}
+    got_kept = {(r.url, r.band, r.key) for r in kept.collect()}
+    flags.unpersist()
+    cached.unpersist()
+    assert got == want_flags
+    assert got_kept == want_kept
 
 
 @settings(max_examples=60, deadline=None)
