@@ -36,12 +36,13 @@ def write_bucketed(
 def bucketed_fetch(
     spark: SparkSession, frontier_table: str, pages_table: str
 ) -> DataFrame:
-    """Co-located inner join of two identically-bucketed tables on url.
+    """Co-located inner join of two identically-bucketed tables on url:
+    the pages' (url, warc_ts, html) followed by the frontier's columns —
+    the fetch join ``wave.run_wave`` runs when given ``pages_table``.
 
     With matching bucket specs Spark plans a sort-merge join with zero
     Exchange operators — the html column streams from the local scan
     straight into the join.
     """
-    frontier = spark.table(frontier_table)
-    pages = spark.table(pages_table)
-    return pages.join(frontier, "url", "inner")
+    pages = spark.table(pages_table).select("url", "warc_ts", "html")
+    return pages.join(spark.table(frontier_table), "url", "inner")

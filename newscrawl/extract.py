@@ -170,14 +170,17 @@ def clean_text(text: str | None) -> str:
     probe (a superset of the pattern's trigger): extracted article text
     rarely contains URLs/boilerplate, so most pages skip most regex
     scans — same output by construction (a pass that cannot match is a
-    no-op)."""
+    no-op).  The junk-word probe is exact only on ASCII text: under
+    re.I, non-ASCII letters such as 'ſ' or 'İ' match ASCII pattern
+    letters that .lower() (or .casefold()) does not map them to, so
+    non-ASCII text always takes the regex pass."""
     if not text:
         return ""
     t = text
     if "http" in t:  # https?:// requires the literal 'http'
         t = _URL_IN_TEXT_RE.sub("", t)
-    low = t.lower()
-    if any(w in low for w in _JUNK_WORDS):  # \b<word>\b needs the word
+    # \b<word>\b needs the word
+    if not t.isascii() or any(w in t.lower() for w in _JUNK_WORDS):
         t = _JUNK_LINE_RE.sub("", t)
     if " \n" in t or "\t\n" in t or t[-1:] in (" ", "\t"):
         t = _TRAIL_SPACE_RE.sub("", t)

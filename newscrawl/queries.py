@@ -50,6 +50,38 @@ def _utc(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
+_MEMO: dict[tuple, object] = {}
+
+
+def session_memo(spark: SparkSession, name: str, key, build):
+    """``build()``'s result, built once per (session, name, key) — the
+    one cache behind every intermediate the registry and the driver
+    entry share across queries (signature frames, trained models, the
+    entry crawl).  The session is its applicationId, unique per
+    SparkContext (id(spark) can collide with a dead session's address
+    after GC).
+
+    Every call first drops the entries of any other session — their
+    SparkContext is gone, and holding a DataFrame would pin a dead
+    app's plan objects — unpersisting best-effort the value, or each
+    member of a tuple value, that is a DataFrame.  So every memoized
+    value dies with its session, and a process cycling sessions (bench
+    reps, test suites) holds at most one session's worth."""
+    app = spark.sparkContext.applicationId
+    for k in [k for k in _MEMO if k[0] != app]:
+        v = _MEMO.pop(k)
+        for df in v if isinstance(v, tuple) else (v,):
+            if isinstance(df, DataFrame):
+                try:
+                    df.unpersist()
+                except Exception:
+                    pass  # dead context — dropping the reference is the point
+    k = (app, name, key)
+    if k not in _MEMO:
+        _MEMO[k] = build()
+    return _MEMO[k]
+
+
 # ---------------------------------------------------------------------------
 # F/J: filters, anti-join, dedup  (SURVEY.md §2.3, §2.6)
 # ---------------------------------------------------------------------------
@@ -492,16 +524,12 @@ CASE WHEN len(string_split_regex(lower(text), '\\s+')) >= 3
 """
 
 
-# shingle-set frame, one persisted copy per (session, corpus) — the
-# _SIG_CACHE pattern (defined below; both verifiers join it TWICE, once
-# per pair side, so an uncached kernel ran twice per query evaluation)
-_SHINGLE_CACHE: dict[tuple[str, str], object] = {}
-
-
 def _shingle_sized(spark, sf_dir):
     """(doc_id, sh, n_sh): distinct word-3-gram shingle sets per doc via
     one Arrow kernel over the scan — shared by the Jaccard and
-    containment verifiers (and by both join sides within each)."""
+    containment verifiers (and by both join sides within each), so one
+    persisted copy per (session, corpus): uncached, the kernel ran once
+    per pair side per query evaluation."""
     import re
 
     import pandas as pd
@@ -532,18 +560,15 @@ def _shingle_sized(spark, sf_dir):
             )
             yield out
 
-    _evict_stale(_SHINGLE_CACHE, spark)
-    key = (_session_key(spark), sf_dir)
-    cached = _SHINGLE_CACHE.get(key)
-    if cached is None:
-        cached = (
-            _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
-            .mapInPandas(shingle_kernel, schema="doc_id long, sh array<string>")
-            .withColumn("n_sh", F.size("sh"))
-            .persist()
-        )
-        _SHINGLE_CACHE[key] = cached
-    return cached
+    return session_memo(
+        spark,
+        "shingles",
+        sf_dir,
+        lambda: _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+        .mapInPandas(shingle_kernel, schema="doc_id long, sh array<string>")
+        .withColumn("n_sh", F.size("sh"))
+        .persist(),
+    )
 
 
 def q_ngram_jaccard_pairs(spark, sf_dir):
@@ -599,34 +624,24 @@ WHERE inter / (na + nb - inter) >= {JACCARD_THRESHOLD}
 """
 
 
-# Signature frames are expensive (the md5 kernel) and shared by every
-# minhash-family query AND both sides of the LSH self-join — cache ONE
-# persisted frame per (session, sf_dir), the same sharing pattern as
-# _KMEANS_CACHE.  Callers that bring their own docs frame manage their
-# own persistence.
-_SIG_CACHE: dict[tuple[str, str], object] = {}
-
-# The exploded corpus token stream — (doc_id, lang, term), whitespace
-# split of lower(trim(text)), empty tokens dropped — is the shared
-# input of every unigram-statistics operator (tf-idf, BM25, surprisal/
-# CCNet, NB lang-ID, DSIR, lexical diversity, Zipf, PMI's unigram leg,
-# the inverted index).  Each previously re-ran the tokenize+explode
-# scan once per BRANCH per query (DataFrame branches don't share
-# subplans).  One persisted frame per (session, corpus) serves them
-# all — the materialize-the-tokenized-corpus-once step every real LLM
-# data pipeline runs before its statistics passes.  (trim vs no-trim
-# is immaterial after the empty-token filter: leading/trailing
-# whitespace only ever contributes empty tokens.)
-_TERMS_CACHE: dict[tuple[str, str], object] = {}
-
-
 def _terms(spark, sf_dir):
-    _evict_stale(_TERMS_CACHE, spark)
-    key = (_session_key(spark), sf_dir)
-    cached = _TERMS_CACHE.get(key)
-    if cached is None:
-        docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-        cached = docs.select(
+    """The exploded corpus token stream — (doc_id, lang, term),
+    whitespace split of lower(trim(text)), empty tokens dropped — the
+    shared input of every unigram-statistics operator (tf-idf, BM25,
+    surprisal/CCNet, NB lang-ID, DSIR, lexical diversity, Zipf, PMI's
+    unigram leg, the inverted index).  Each previously re-ran the
+    tokenize+explode scan once per BRANCH per query (DataFrame branches
+    don't share subplans).  One persisted frame per (session, corpus)
+    serves them all — the materialize-the-tokenized-corpus-once step
+    every real LLM data pipeline runs before its statistics passes.
+    (trim vs no-trim is immaterial after the empty-token filter:
+    leading/trailing whitespace only ever contributes empty tokens.)"""
+    return session_memo(
+        spark,
+        "terms",
+        sf_dir,
+        lambda: _t(spark, sf_dir, "documents")
+        .select(
             "doc_id",
             "lang",
             F.explode(
@@ -635,34 +650,9 @@ def _terms(spark, sf_dir):
                     lambda t: t != "",
                 )
             ).alias("term"),
-        ).persist()
-        _TERMS_CACHE[key] = cached
-    return cached
-
-
-def _session_key(spark) -> str:
-    """Stable identity of a live session for DataFrame caches —
-    applicationId is unique per SparkContext, unlike id(spark), which
-    can collide with a dead session's address after GC."""
-    return spark.sparkContext.applicationId
-
-
-def _evict_stale(cache: dict, spark, frame_of=lambda v: v) -> None:
-    """Drop cache entries keyed to any applicationId other than the
-    live session's (their SparkContext is gone — holding the DataFrame
-    reference would pin a dead app's plan objects forever), unpersisting
-    best-effort in case the old context is somehow still alive.
-    ``frame_of`` extracts the persisted DataFrame from the cached value.
-    Every persisted-frame cache calls this on lookup, so a long-lived
-    process cycling SparkSessions (bench reps, test suites) holds at
-    most one session's worth of cached frames."""
-    live = _session_key(spark)
-    for k in [k for k in cache if k[0] != live]:
-        v = cache.pop(k)
-        try:
-            frame_of(v).unpersist()
-        except Exception:
-            pass  # dead context — dropping the reference is the point
+        )
+        .persist(),
+    )
 
 
 def _minhash_signatures(spark, sf_dir, docs=None):
@@ -677,38 +667,29 @@ def _minhash_signatures(spark, sf_dir, docs=None):
     and engine-neutral: min of hex slices == min of the 32-bit values.
     Computed per doc in one Arrow kernel instead of 8 min-aggs over
     exploded shingle rows: the signature rides the scan, nothing
-    explodes or shuffles before the (tiny) band join."""
-    import hashlib
-    import re
+    explodes or shuffles before the (tiny) band join.  The kernel is
+    the crawl gate's band-key function (extract.minhash_band_keys, run
+    natively when _fp_native loads): band b's key is h(2b) || h(2b+1).
 
+    The default corpus's frame is shared by every minhash-family query
+    AND both sides of the LSH self-join, so it is persisted once per
+    (session, corpus); a caller-supplied ``docs`` frame is not memoized
+    (its caller manages its persistence)."""
     import pandas as pd
 
     def kernel(batch_iter):
+        from ._fp_native import get_band_keys_fn
+        from .extract import minhash_band_keys
+
+        bk = get_band_keys_fn(minhash_band_keys)
         for pdf in batch_iter:
             ids, sigs = [], []
             for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                toks = re.split(r"\s+", (text or "").lower())
-                if len(toks) < 3:
+                keys = bk(text)
+                if not keys:  # < 3 tokens: no shingles, no signature
                     continue
-                shingles = set(
-                    " ".join(toks[i : i + 3]) for i in range(len(toks) - 2)
-                )
-                d0 = [
-                    hashlib.md5(f"0|{s}".encode("utf-8")).hexdigest()
-                    for s in shingles
-                ]
-                d1 = [
-                    hashlib.md5(f"1|{s}".encode("utf-8")).hexdigest()
-                    for s in shingles
-                ]
                 ids.append(doc_id)
-                sigs.append(
-                    tuple(
-                        min(d[8 * k : 8 * k + 8] for d in ds)
-                        for ds in (d0, d1)
-                        for k in range(4)
-                    )
-                )
+                sigs.append([h for k in keys for h in (k[:8], k[8:])])
             out = pd.DataFrame(
                 sigs, columns=[f"h{i}" for i in range(N_MINHASH)], dtype="object"
             )
@@ -718,17 +699,14 @@ def _minhash_signatures(spark, sf_dir, docs=None):
     ddl = "doc_id long, " + ", ".join(f"h{i} string" for i in range(N_MINHASH))
     if docs is not None:
         return docs.select("doc_id", "text").mapInPandas(kernel, schema=ddl)
-    _evict_stale(_SIG_CACHE, spark)
-    key = (_session_key(spark), sf_dir)
-    cached = _SIG_CACHE.get(key)
-    if cached is None:
-        cached = (
-            _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
-            .mapInPandas(kernel, schema=ddl)
-            .persist()
-        )
-        _SIG_CACHE[key] = cached
-    return cached
+    return session_memo(
+        spark,
+        "minhash_signatures",
+        sf_dir,
+        lambda: _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+        .mapInPandas(kernel, schema=ddl)
+        .persist(),
+    )
 
 
 def q_minhash_lsh_candidates(spark, sf_dir, docs=None):
@@ -883,12 +861,6 @@ FROM verified
 """
 
 
-# default-corpus near-dup clusters, one persisted copy per (session,
-# corpus) — shared by near_dup_clusters / minhash_dedup_keep /
-# corpus_prepare (the _SIG_CACHE pattern)
-_NDC_CACHE: dict[tuple[str, str], object] = {}
-
-
 def q_near_dup_clusters(spark, sf_dir, docs=None):
     """Near-duplicate CLUSTERS: connected components over the MinHash-
     LSH candidate pairs, labeled by each component's smallest doc_id —
@@ -906,16 +878,21 @@ def q_near_dup_clusters(spark, sf_dir, docs=None):
     # here silently clustered the default corpus for any caller that
     # brought its own frame (latent until corpus_prepare_crawled, whose
     # docs are crawled articles, not the sf documents table).
-    # Default-corpus clusters are session-cached (the _SIG_CACHE
-    # pattern): the propagation loop re-ran per evaluation while THREE
-    # bench-path consumers need it (this query, minhash_dedup_keep,
-    # corpus_prepare's dedup leg).
-    if docs is None:
-        _evict_stale(_NDC_CACHE, spark)
-        _nk = (_session_key(spark), sf_dir)
-        cached = _NDC_CACHE.get(_nk)
-        if cached is not None:
-            return cached
+    # Default-corpus clusters are persisted once per (session, corpus):
+    # the propagation loop re-ran per evaluation while THREE bench-path
+    # consumers need it (this query, minhash_dedup_keep, corpus_prepare's
+    # dedup leg).
+    if docs is not None:
+        return _near_dup_clusters(spark, sf_dir, docs)
+    return session_memo(
+        spark,
+        "near_dup_clusters",
+        sf_dir,
+        lambda: _near_dup_clusters(spark, sf_dir, None).persist(),
+    )
+
+
+def _near_dup_clusters(spark, sf_dir, docs):
     pairs = q_minhash_lsh_candidates(spark, sf_dir, docs=docs)
     edges = (
         pairs.unionByName(
@@ -976,15 +953,11 @@ def q_near_dup_clusters(spark, sf_dir, docs=None):
     else:  # pragma: no cover
         raise RuntimeError("label propagation did not converge in 24 rounds")
     edges.unpersist()
-    out = labels.select(
+    return labels.select(
         "doc_id",
         F.col("label").alias("cluster"),
         (F.col("doc_id") == F.col("label")).alias("is_canonical"),
     )
-    if docs is None:
-        out = out.persist()
-        _NDC_CACHE[_nk] = out
-    return out
 
 
 SQL_NEAR_DUP_CLUSTERS = """
@@ -1236,22 +1209,20 @@ def _emb_dot(u, v):
     )
 
 
-_IVF_CACHE: dict[tuple[str, str], object] = {}
-
-
 def _ivf_ranked(spark, sf_dir):
     """(vec_id, embedding, cent_id, rnk): every vector ranked against the
     8 seed centroids by cosine — rnk=1 is the IVF assignment, rnk<=P are
     the multi-probe buckets.  One broadcast crossJoin + one Window;
-    built and persisted ONCE per (session, corpus) via _IVF_CACHE (the
-    _SIG_CACHE pattern) — callers share the frame instead of each
-    persisting a fresh copy per call, which leaked one cached frame per
-    invocation across bench reps and recall sweeps."""
-    _evict_stale(_IVF_CACHE, spark)
-    key = (_session_key(spark), sf_dir)
-    cached = _IVF_CACHE.get(key)
-    if cached is not None:
-        return cached
+    built and persisted ONCE per (session, corpus) — callers share the
+    frame instead of each persisting a fresh copy per call, which leaked
+    one cached frame per invocation across bench reps and recall
+    sweeps."""
+    return session_memo(
+        spark, "ivf_ranked", sf_dir, lambda: _build_ivf_ranked(spark, sf_dir)
+    )
+
+
+def _build_ivf_ranked(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings").withColumn(
         "_ne", F.sqrt(_emb_dot(F.col("embedding"), F.col("embedding")))
     )
@@ -1271,13 +1242,11 @@ def _ivf_ranked(spark, sf_dir):
     w = W.partitionBy("vec_id").orderBy(
         F.round(cos, 6).desc(), F.col("cent_id")
     )
-    ranked = (
+    return (
         emb.crossJoin(F.broadcast(cents))
         .withColumn("rnk", F.row_number().over(w))
         .persist()
     )
-    _IVF_CACHE[key] = ranked
-    return ranked
 
 
 def _multiprobe_top(spark, sf_dir, ranked, probes: int):
@@ -1322,7 +1291,7 @@ def q_knn_ivf_multiprobe(spark, sf_dir, probes: int = KNN_IVF_PROBES):
     recall gain over single-probe is visible row-level.  The ranked
     assignment frame is persisted and shared by the probe-bucket collect
     and the search itself (it was evaluated twice before)."""
-    ranked = _ivf_ranked(spark, sf_dir)  # persisted + shared via _IVF_CACHE
+    ranked = _ivf_ranked(spark, sf_dir)  # persisted + shared per session
     top = _multiprobe_top(spark, sf_dir, ranked, probes)
     exact = q_knn_cosine(spark, sf_dir).select(
         "vec_id", F.lit(1).alias("_in")
@@ -1343,7 +1312,7 @@ def q_knn_recall_multiprobe(spark, sf_dir):
     index (recall should be monotone in P; P=K would equal brute force).
     One persisted ranked-assignment frame serves every P; the per-P
     top-10s union into ONE join + agg against the exact top-10."""
-    ranked = _ivf_ranked(spark, sf_dir)  # persisted + shared via _IVF_CACHE
+    ranked = _ivf_ranked(spark, sf_dir)  # persisted + shared per session
     tops = None
     for p in KNN_RECALL_PROBE_SWEEP:
         t = _multiprobe_top(spark, sf_dir, ranked, p).select(
@@ -1585,11 +1554,6 @@ FROM documents
 """
 
 
-# simhash signature frame, one persisted copy per (session, corpus) —
-# the _SIG_CACHE pattern (q_simhash_near_dup self-joins it)
-_SIMHASH_CACHE: dict[tuple[str, str], object] = {}
-
-
 def q_simhash(spark, sf_dir):
     """SimHash document signature over word-3-gram shingles: per bit b of
     md5(shingle)'s first 64 bits, sign-sum across shingles; bit=1 iff
@@ -1638,21 +1602,18 @@ def q_simhash(spark, sf_dir):
                 }
             )
 
-    # one persisted signature frame per (session, corpus) — the
-    # _SIG_CACHE pattern: the md5 kernel is the cost, and
-    # q_simhash_near_dup's banded self-join otherwise evaluates it once
-    # per join SIDE (DataFrame branches don't share subplans)
-    _evict_stale(_SIMHASH_CACHE, spark)
-    key = (_session_key(spark), sf_dir)
-    cached = _SIMHASH_CACHE.get(key)
-    if cached is None:
-        cached = (
-            _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
-            .mapInPandas(kernel, schema="doc_id long, simhash string")
-            .persist()
-        )
-        _SIMHASH_CACHE[key] = cached
-    return cached
+    # one persisted signature frame per (session, corpus): the md5
+    # kernel is the cost, and q_simhash_near_dup's banded self-join
+    # otherwise evaluates it once per join SIDE (DataFrame branches
+    # don't share subplans)
+    return session_memo(
+        spark,
+        "simhash",
+        sf_dir,
+        lambda: _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+        .mapInPandas(kernel, schema="doc_id long, simhash string")
+        .persist(),
+    )
 
 
 def _sql_simhash() -> str:
@@ -2264,22 +2225,28 @@ def _assign_to_centroids(emb, cents_df):
     )
 
 
-# (sf_dir, n_iters) -> trained centroids. Training is deterministic in
-# its inputs, and three queries (kmeans_train, knn_ivf_trained,
-# knn_recall_trained) share it — cache so a driver pass trains once.
-_KMEANS_CACHE: dict[tuple[str, int], dict[int, list[float]]] = {}
-
-
 def _kmeans_train_centroids(spark, sf_dir, n_iters=N_KMEANS_ITERS):
     """Distributed Lloyd iterations with the canonical driver sync: the
     assignment and the per-(bucket,dim) mean run as Spark jobs; only the
     K x dim centroid matrix (512 doubles — bounded regardless of corpus
     size, same shape as Spark MLlib's KMeans) crosses to the driver
     between iterations. Returns {cent_id: [dim values]}. Seeds are
-    vec_id 1..K quantized exactly like every later iterate."""
-    key = (sf_dir, n_iters)
-    if key in _KMEANS_CACHE:
-        return {cid: list(v) for cid, v in _KMEANS_CACHE[key].items()}
+    vec_id 1..K quantized exactly like every later iterate.
+
+    Training is deterministic in its inputs, and three queries
+    (kmeans_train, knn_ivf_trained, knn_recall_trained) share it — so
+    it runs once per (session, corpus, n_iters), and every caller gets
+    its own copy of the lists."""
+    cents = session_memo(
+        spark,
+        "kmeans_centroids",
+        (sf_dir, n_iters),
+        lambda: _kmeans_lloyd(spark, sf_dir, n_iters),
+    )
+    return {cid: list(v) for cid, v in cents.items()}
+
+
+def _kmeans_lloyd(spark, sf_dir, n_iters):
     emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     seed = (
         emb.filter((F.col("vec_id") >= 1) & (F.col("vec_id") <= KMEANS_K))
@@ -2316,7 +2283,6 @@ def _kmeans_train_centroids(spark, sf_dir, n_iters=N_KMEANS_ITERS):
             cid: [got.get((cid, d), vals[d]) for d in range(EMB_DIM)]
             for cid, vals in cents.items()
         }
-    _KMEANS_CACHE[key] = {cid: list(v) for cid, v in cents.items()}
     return cents
 
 
@@ -3358,26 +3324,28 @@ def q_decontaminate(spark, sf_dir):
     return decontaminate(docs.filter(~is_bench), docs.filter(is_bench))
 
 
-# eval-set parquet written once per sf_dir (deterministic seeded slice) —
-# the production-shaped input for q_decontaminate_table
-_EVAL_SET_CACHE: dict[str, str] = {}
-
-
 def _eval_set_path(spark, sf_dir: str) -> str:
-    if sf_dir not in _EVAL_SET_CACHE:
-        import tempfile
+    """Eval-set parquet written once per (session, corpus) (deterministic
+    seeded slice) — the production-shaped input for
+    q_decontaminate_table."""
+    return session_memo(
+        spark, "eval_set", sf_dir, lambda: _write_eval_set(spark, sf_dir)
+    )
 
-        path = tempfile.mkdtemp(prefix="newscrawl_eval_set_") + "/eval_set.parquet"
-        (
-            _t(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") % 29 == 0)
-            .select("doc_id", "text")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-        _EVAL_SET_CACHE[sf_dir] = path
-    return _EVAL_SET_CACHE[sf_dir]
+
+def _write_eval_set(spark, sf_dir: str) -> str:
+    import tempfile
+
+    path = tempfile.mkdtemp(prefix="newscrawl_eval_set_") + "/eval_set.parquet"
+    (
+        _t(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 29 == 0)
+        .select("doc_id", "text")
+        .coalesce(1)
+        .write.mode("overwrite")
+        .parquet(path)
+    )
+    return path
 
 
 def q_decontaminate_table(spark, sf_dir):
@@ -4098,9 +4066,15 @@ HAVING count(DISTINCT doc_id) > 1
 
 SEMANTIC_DEDUP_COS = 0.40
 
-# trained-centroid assignment frame, one persisted copy per
-# (session, corpus) — the _SIG_CACHE pattern
-_SEMDEDUP_CACHE: dict[tuple[str, str], object] = {}
+
+def _semdedup_assign(spark, sf_dir):
+    cents = _kmeans_train_centroids(spark, sf_dir)
+    cents_df = spark.createDataFrame(
+        [(cid, vals) for cid, vals in sorted(cents.items())],
+        "cent_id long, cvec array<double>",
+    )
+    emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    return _assign_to_centroids(emb, cents_df).persist()
 
 
 def q_semantic_dedup(spark, sf_dir):
@@ -4113,20 +4087,12 @@ def q_semantic_dedup(spark, sf_dir):
     pairwise cost drops from O(n^2) to O(sum_k n_k^2), and each cluster's
     pairs are one co-partitioned self-join — the clustering IS the
     blocking structure, so at 100 TB no task sees more than a cluster."""
-    _evict_stale(_SEMDEDUP_CACHE, spark)
-    _ak = (_session_key(spark), sf_dir)
-    assigned = _SEMDEDUP_CACHE.get(_ak)
-    if assigned is None:
-        cents = _kmeans_train_centroids(spark, sf_dir)
-        cents_df = spark.createDataFrame(
-            [(cid, vals) for cid, vals in sorted(cents.items())],
-            "cent_id long, cvec array<double>",
-        )
-        emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        # memoized per (session, corpus) — the _SIG_CACHE pattern; a
-        # per-call persist leaked one cached frame per invocation
-        assigned = _assign_to_centroids(emb, cents_df).persist()
-        _SEMDEDUP_CACHE[_ak] = assigned
+    # the trained-centroid assignment frame, one persisted copy per
+    # (session, corpus): a per-call persist leaked one cached frame per
+    # invocation
+    assigned = session_memo(
+        spark, "semdedup_assigned", sf_dir, lambda: _semdedup_assign(spark, sf_dir)
+    )
     # per-side norms come staged from _assign_to_centroids (_ne) — the
     # inlined form re-folded both self-dots once per intra-cluster PAIR
     a = assigned.select(
@@ -4876,10 +4842,6 @@ def _bpe_words(spark, sf_dir, carry_word: bool = False):
     return words.select(tok, "freq")
 
 
-# bpe_train and bpe_encode share one training pass per (session, corpus)
-# — the same sharing pattern as _KMEANS_CACHE / _SIG_CACHE.
-_BPE_CACHE: dict[tuple[str, str, bool], tuple[list, object]] = {}
-
 # Driver-state bound for the merge loop: the trained working set is the
 # top-V distinct words by (freq desc, word) — the standard tokenizer-
 # trainer cutoff (rare-word tails don't win merges).  The SQL oracle
@@ -4939,8 +4901,9 @@ def _bpe_merge_loop(rows: list[tuple]) -> tuple[list, list]:
 def _bpe_train_vocab(spark, sf_dir, carry_word: bool = False):
     """Train the BPE tokenizer; returns (merges, final_vocab) where
     final_vocab is a (word?, tok, freq) frame after all merges — the
-    trained word -> segmentation mapping.  Cached per (session, corpus,
-    carry_word).
+    trained word -> segmentation mapping.  bpe_train and bpe_encode
+    share one training pass per (session, corpus, carry_word); every
+    caller gets its own copy of the merges list.
 
     Scale shape: the ONLY corpus-cardinality stage is the distributed
     distinct-word frequency aggregation (_bpe_words — one scan + one
@@ -4953,11 +4916,16 @@ def _bpe_train_vocab(spark, sf_dir, carry_word: bool = False):
     same tiny frame: right state bound, but ~12 driver-synced jobs of
     pure scheduling overhead per training (the slowest query in the r5
     suite at 3.5 s median)."""
-    _evict_stale(_BPE_CACHE, spark, frame_of=lambda v: v[1])
-    key = (_session_key(spark), sf_dir, carry_word)
-    if key in _BPE_CACHE:
-        merges, cur = _BPE_CACHE[key]
-        return list(merges), cur
+    merges, cur = session_memo(
+        spark,
+        "bpe_vocab",
+        (sf_dir, carry_word),
+        lambda: _bpe_train(spark, sf_dir, carry_word),
+    )
+    return list(merges), cur
+
+
+def _bpe_train(spark, sf_dir, carry_word):
     schema = (
         "word string, tok string, freq long" if carry_word else "tok string, freq long"
     )
@@ -4968,9 +4936,7 @@ def _bpe_train_vocab(spark, sf_dir, carry_word: bool = False):
         .collect()
     )
     merges, final_rows = _bpe_merge_loop([tuple(r) for r in rows])
-    cur = spark.createDataFrame(final_rows, schema)
-    _BPE_CACHE[key] = (list(merges), cur)
-    return merges, cur
+    return merges, spark.createDataFrame(final_rows, schema)
 
 
 def q_bpe_train(spark, sf_dir):
@@ -5235,11 +5201,6 @@ GROUP BY bg.doc_id
 """
 
 
-# corpus_prepare's shared (doc_id, lang, text) scan, one persisted frame
-# per (session, corpus) — the _SIG_CACHE pattern
-_CORPUS_CACHE: dict[tuple[str, str], object] = {}
-
-
 def q_corpus_prepare(spark, sf_dir):
     """The END-TO-END training-corpus preparation pipeline as ONE query:
     quality-prune (every gate of q_quality_prune_pipeline) AND near-dup
@@ -5261,25 +5222,25 @@ def q_corpus_prepare(spark, sf_dir):
     share subplans, so without the persist the quality gates, the
     signature kernel, and the survivor join each read the corpus
     independently.  The shared frame is memoized per (session, corpus)
-    like _SIG_CACHE — re-persisting a fresh copy on every call would
-    accumulate executor cache across bench reps / long sessions."""
-    _evict_stale(_CORPUS_CACHE, spark)
-    _ck = (_session_key(spark), sf_dir)
-    shared = _CORPUS_CACHE.get(_ck)
-    if shared is None:
-        # no _spread (measured 0.49 vs 0.58 s): the gates are light
-        # per-row JVM expressions; the repartition only added an
-        # Exchange ahead of the persist
-        shared = _t(spark, sf_dir, "documents").select(
-            "doc_id", "lang", "text"
-        ).persist()
-        _CORPUS_CACHE[_ck] = shared
+    — re-persisting a fresh copy on every call would accumulate
+    executor cache across bench reps / long sessions."""
+    # no _spread (measured 0.49 vs 0.58 s): the gates are light per-row
+    # JVM expressions; the repartition only added an Exchange ahead of
+    # the persist
+    shared = session_memo(
+        spark,
+        "corpus",
+        sf_dir,
+        lambda: _t(spark, sf_dir, "documents")
+        .select("doc_id", "lang", "text")
+        .persist(),
+    )
     kept_q = q_quality_prune_pipeline(spark, sf_dir, docs=shared).filter(
         F.col("keep") == 1
     ).select("doc_id", "n_tokens")
     # the dedup leg deliberately takes the DEFAULT corpus path, not
     # docs=shared: its cost is the signature kernel, and the default
-    # path hits the per-session _SIG_CACHE (one persisted signature
+    # path hits the session-memoized signatures (one persisted signature
     # frame reused by every minhash-family query this session), whereas
     # a docs= frame recomputes signatures per call (2.4 s -> 4.0 s
     # measured when the r6 docs-threading fix briefly rerouted it)
@@ -5642,11 +5603,6 @@ FROM (
 N_SRP_BITS = 8
 
 
-# SRP (vec_id, bucket) frame, one persisted copy per (session, corpus)
-# — the _SIG_CACHE pattern
-_SRP_CACHE: dict[tuple[str, str], object] = {}
-
-
 def _srp_signs(j: int, dim: int) -> list[int]:
     """Deterministic +-1 projection row j: sign from the parity of the
     first hex nibble of md5(f'{j}|{d}') — the same derivation the SQL
@@ -5661,6 +5617,22 @@ def _srp_signs(j: int, dim: int) -> list[int]:
     ]
 
 
+def _srp_keyed(emb, dim):
+    bits = []
+    for j in range(N_SRP_BITS):
+        signs = F.array(*[F.lit(float(v)) for v in _srp_signs(j, dim)])
+        proj = F.aggregate(
+            F.zip_with(
+                F.col("embedding"), signs,
+                lambda x, sgn: x.cast("double") * sgn,
+            ),
+            F.lit(0.0),
+            lambda acc, v: acc + v,
+        )
+        bits.append(F.when(proj >= 0, F.lit("1")).otherwise(F.lit("0")))
+    return emb.select("vec_id", F.concat(*bits).alias("bucket")).persist()
+
+
 def q_srp_lsh_candidates(spark, sf_dir):
     """Signed-random-projection LSH over the embedding table — the
     cosine-ANN analog of the text MinHash bands (third ANN family next
@@ -5672,39 +5644,23 @@ def q_srp_lsh_candidates(spark, sf_dir):
     never diverges between engines.  One scan + one equi-join on the
     bucket key; no pairwise anything.  The keyed (vec_id, bucket) frame
     — 16 interpreted projection folds per vector — is persisted once per
-    (session, corpus) like _SIG_CACHE: it feeds BOTH sides of the
-    self-join here plus q_srp_near_dup's candidate leg."""
-    _evict_stale(_SRP_CACHE, spark)
-    _ck = (_session_key(spark), sf_dir)
-    keyed = _SRP_CACHE.get(_ck)
-    if keyed is None:
-        emb = _t(spark, sf_dir, "embeddings")
-        # dimension from one sampled row (the projection sign tables are
-        # dim-sized literals). Empty table -> empty candidates, not a
-        # TypeError on None; EMB_DIM pins the whole table to the sampled
-        # row's dimension — a ragged vector would silently hash wrong, so
-        # fail loudly instead.
-        _first = emb.select("embedding").first()
-        if _first is None or _first[0] is None:
-            return emb.sparkSession.createDataFrame(
-                [], "vec_a long, vec_b long, bucket string"
-            )
-        dim = len(_first[0])
-        assert dim == EMB_DIM, f"embedding dim {dim} != schema EMB_DIM {EMB_DIM}"
-        bits = []
-        for j in range(N_SRP_BITS):
-            signs = F.array(*[F.lit(float(v)) for v in _srp_signs(j, dim)])
-            proj = F.aggregate(
-                F.zip_with(
-                    F.col("embedding"), signs,
-                    lambda x, sgn: x.cast("double") * sgn,
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-            bits.append(F.when(proj >= 0, F.lit("1")).otherwise(F.lit("0")))
-        keyed = emb.select("vec_id", F.concat(*bits).alias("bucket")).persist()
-        _SRP_CACHE[_ck] = keyed
+    (session, corpus): it feeds BOTH sides of the self-join here plus
+    q_srp_near_dup's candidate leg."""
+    emb = _t(spark, sf_dir, "embeddings")
+    # dimension from one sampled row (the projection sign tables are
+    # dim-sized literals). Empty table -> empty candidates, not a
+    # TypeError on None — returned before the memo, so the empty frame
+    # is never stored; EMB_DIM pins the whole table to the sampled
+    # row's dimension — a ragged vector would silently hash wrong, so
+    # fail loudly instead.
+    _first = emb.select("embedding").first()
+    if _first is None or _first[0] is None:
+        return spark.createDataFrame([], "vec_a long, vec_b long, bucket string")
+    dim = len(_first[0])
+    assert dim == EMB_DIM, f"embedding dim {dim} != schema EMB_DIM {EMB_DIM}"
+    keyed = session_memo(
+        spark, "srp_keyed", sf_dir, lambda: _srp_keyed(emb, dim)
+    )
     a = keyed.alias("a")
     b = keyed.alias("b")
     return (
@@ -6843,7 +6799,6 @@ LOGREG_LR = 16.0
 LOGREG_C1 = 0.45  # feature centering (fixed constants, not data stats)
 LOGREG_C2 = 0.75
 LOGREG_LABEL_CHARS = 250
-_LOGREG_CACHE: dict[tuple, tuple] = {}
 
 
 def _logreg_feats(docs):
@@ -6861,12 +6816,16 @@ def _logreg_feats(docs):
 
 def _logreg_train(spark, sf_dir):
     """3 GD iterations; only the 3-weight vector (micro-int) crosses to
-    the driver per iteration — MLlib's treeAggregate shape."""
+    the driver per iteration — MLlib's treeAggregate shape.  Trained
+    once per (session, corpus)."""
+    return session_memo(
+        spark, "logreg_weights", sf_dir, lambda: _logreg_gd(spark, sf_dir)
+    )
+
+
+def _logreg_gd(spark, sf_dir):
     import math
 
-    key = (sf_dir,)
-    if key in _LOGREG_CACHE:
-        return _LOGREG_CACHE[key]
     feats = _logreg_feats(_t(spark, sf_dir, "documents"))
     w = [0, 0, 0]
     for _ in range(LOGREG_ITERS):
@@ -6895,7 +6854,6 @@ def _logreg_train(spark, sf_dir):
             w[k] - math.floor(LOGREG_LR * float(int(row[f"g{k}"] or 0)) / n)
             for k in range(3)
         ]
-    _LOGREG_CACHE[key] = tuple(w)
     return tuple(w)
 
 

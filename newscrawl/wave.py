@@ -313,9 +313,7 @@ def run_wave(
         bucketing.write_bucketed(
             kept.select(*FRONTIER_COLS), cand_table, fetch_buckets
         )
-        fetched = spark.table(pages_table).select("url", "warc_ts", "html").join(
-            spark.table(cand_table), "url", "inner"
-        )
+        fetched = bucketing.bucketed_fetch(spark, cand_table, pages_table)
     else:
         fetched = pages.select("url", "warc_ts", "html").join(
             F.broadcast(kept.select(*FRONTIER_COLS)), "url", "inner"

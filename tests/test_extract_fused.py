@@ -93,6 +93,16 @@ def test_clean_text_fast_paths_preserve_spec():
         t = re.sub(r"\n{3,}", "\n\n", t)
         return t.strip()
 
-    texts = EDGE_TEXTS + [ex.extract_text(p.html) for p in _synth_pages()]
+    # non-ASCII letters that re.I matches against the junk words but
+    # .lower() does not turn into them: long s, dotted capital I, and
+    # the Kelvin sign (which .lower() does fold to 'k')
+    non_ascii = [
+        "Pleaſe ſubscribe now\nkept line",
+        "Click to SİGN UP today\nkept line",
+        "Accept our cooKie policy\nkept line",
+        "café news\nno junk here",
+    ]
+    texts = EDGE_TEXTS + non_ascii + [ex.extract_text(p.html) for p in _synth_pages()]
     for t in texts:
         assert ex.clean_text(t) == spec(t), repr(t)
+    assert all(ex.clean_text(t).startswith("kept") for t in non_ascii[:3])

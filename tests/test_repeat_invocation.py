@@ -1,12 +1,13 @@
 """Same-session repeat-invocation sweep: every registered query must be
 idempotent when called twice against the same corpus.
 
-This pins the per-session DataFrame-cache class: queries.py memoizes
-seven expensive intermediates (_SIG_CACHE, _BPE_CACHE, _KMEANS_CACHE,
-_CORPUS_CACHE, _LOGREG_CACHE, _IVF_CACHE, _SEMDEDUP_CACHE) per
-(applicationId, sf_dir), and the round-5 review found one real bug in
-exactly this class (caches keyed by id(spark), which collides after
-GC).  The second call exercises every cache-hit path; a wrong key, a
+This pins the per-session cache class: queries.py memoizes its
+expensive shared intermediates (signature, shingle, term and simhash
+frames, near-dup clusters, IVF and SRP buckets, the k-means, BPE and
+logistic-regression training passes, the corpus scan, the eval set)
+through one helper, session_memo, keyed by (applicationId, name,
+sf_dir), and the round-5 review found one real bug in exactly this
+class (caches keyed by id(spark), which collides after GC).  The second call exercises every cache-hit path; a wrong key, a
 stale eviction, or a mutated cached frame shows up as a result diff.
 
 Comparison is order-insensitive (several queries return unordered

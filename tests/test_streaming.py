@@ -440,3 +440,34 @@ def test_stream_crawl_fresh_lineage_does_not_skip_new_work(spark, tmp_path):
     urls2 = {r.url for r in arts2}
     assert len(arts2) == len(urls2)  # seen-set absorbed the replayed pages
     assert urls2 > urls1  # the children actually crawled
+
+
+def test_stream_crawl_accepts_file_uri_checkpoint(spark, tmp_path):
+    """A local checkpoint given as a file: URI (either spelling) crawls:
+    the lineage id is read from the path with the scheme stripped."""
+    cfg = synth.SynthConfig(n_seed=3, n_total=12, hot_links=False)
+    pages_dir = str(tmp_path / "pages")
+    synth.build_pages_df(spark, cfg, num_partitions=1).write.parquet(pages_dir)
+    for i, prefix in enumerate(("file:", "file://")):
+        catalog = ManifestParquetCatalog(str(tmp_path / f"cat{i}"))
+        wave.init_crawl(spark, catalog, synth.build_seeds_df(spark, cfg))
+        n = streaming.stream_crawl(
+            spark, catalog, pages_dir,
+            checkpoint_dir=prefix + str(tmp_path / f"ckpt{i}"),
+        )
+        assert n == 1
+        assert wave.read_articles(spark, catalog).count() > 0
+
+
+def test_stream_crawl_rejects_remote_checkpoint(spark, tmp_path):
+    """The lineage id is read with local file IO, so a remote checkpoint
+    is refused before the stream starts — with a ValueError, which
+    (unlike an assert) survives python -O."""
+    import pytest
+
+    catalog = ManifestParquetCatalog(str(tmp_path / "cat"))
+    with pytest.raises(ValueError, match="remote checkpoint"):
+        streaming.stream_crawl(
+            spark, catalog, str(tmp_path / "pages"),
+            checkpoint_dir="s3a://bucket/ckpt",
+        )
