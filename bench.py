@@ -4,7 +4,8 @@
 Prints ONE JSON line:
   {"metric": ..., "value": <total sec>, "unit": "sec",
    "queries": {name: sec, ...}, "sf": ...,
-   "crawl": {"urls": N, "sec": s, "urls_per_sec": r}, "cpus": N}
+   "crawl": {"urls": N, "sec": s, "urls_per_sec": r}, "cpus": N,
+   "host": {host facts: CPUs, RAM, driver heap, versions, native kernels}}
 
 Headline components:
 - the crawl engine end-to-end (synthetic corpus generated distributed,
@@ -14,14 +15,16 @@ Headline components:
 - representative operator queries at $SPARK_GRAFT_SF_DIR.
 
 Env knobs: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-SPARK_GRAFT_CPUS (default 32), NEWSCRAWL_BENCH_SCALE (crawl corpus
-size multiplier, default 1).
+SPARK_GRAFT_CPUS (default: the CPUs this process may run on),
+NEWSCRAWL_BENCH_SCALE (crawl corpus size multiplier, default 1). The
+driver heap is sized from the host: 60% of MemTotal.
 
 Scaling-efficiency evidence (north rule's two-cluster-size criterion,
 no real cluster in this sandbox): ``python bench.py --scaling`` runs one
-maximal crawl wave in fresh subprocesses pinned with taskset to 8 CPUs
-(N) and 32 CPUs (4N) on the same corpus and writes BENCH/BASELINE.md
-with both throughputs and efficiency = (T_4N/T_N)/4.
+maximal crawl wave in fresh subprocesses pinned with taskset to N and
+4N CPUs (N = a quarter of the available CPUs) on the same corpus and
+writes BENCH/BASELINE.md with both throughputs and efficiency =
+(T_4N/T_N)/4.
 """
 
 from __future__ import annotations
@@ -32,6 +35,41 @@ import shutil
 import subprocess
 import sys
 import time
+
+
+def available_cpus() -> list[int]:
+    """The CPU ids this process may run on (what ``nproc`` counts)."""
+    return sorted(os.sched_getaffinity(0))
+
+
+def mem_total_bytes() -> int:
+    with open("/proc/meminfo") as f:
+        for line in f:
+            if line.startswith("MemTotal:"):
+                return int(line.split()[1]) * 1024
+    raise RuntimeError("MemTotal missing from /proc/meminfo")
+
+
+def driver_memory() -> str:
+    """60% of the host's RAM: local mode runs every task in the driver
+    JVM, and the rest is left to the Python workers and the page cache."""
+    return f"{int(mem_total_bytes() * 0.6) >> 20}m"
+
+
+def host_facts() -> dict:
+    import pyarrow
+    import pyspark
+
+    from newscrawl import _fp_native
+
+    return {
+        "cpus_available": len(available_cpus()),
+        "mem_total_gb": round(mem_total_bytes() / (1 << 30), 1),
+        "driver_memory": driver_memory(),
+        "spark": pyspark.__version__,
+        "pyarrow": pyarrow.__version__,
+        **_fp_native.kernel_flags(),
+    }
 
 
 def build_spark(cpus: int):
@@ -46,7 +84,7 @@ def build_spark(cpus: int):
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "48g")
+        .config("spark.driver.memory", driver_memory())
         # enough scan splits that the extract stage can use every core
         # (default 128m gives ~18 splits on the bench corpus)
         .config("spark.sql.files.maxPartitionBytes", "16m")
@@ -475,6 +513,7 @@ def run_once(
                 "sf": 0,
                 "crawl": st,
                 "cpus": cpus,
+                "host": host_facts(),
             }
         crawl = bench_crawl(spark, scale)
         if crawl_only:
@@ -494,6 +533,7 @@ def run_once(
             "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
             "crawl": crawl,
             "cpus": cpus,
+            "host": host_facts(),
         }
         if crawl_gated is not None:
             # per-wave cost of the dedup+quality sink gates, as a
@@ -671,19 +711,25 @@ def residue_section(residue: dict, pair) -> str:
 
 
 def scaling_report(sf_dir: str, scale: int) -> None:
-    """One maximal crawl wave at 8 pinned CPUs (N) vs 32 (4N), fresh JVM
-    each. Big single wave + 4x corpus because scaling efficiency is only
-    meaningful when the data plane dominates per-wave fixed costs — the
-    regime a 100 TB crawl runs in.
+    """One maximal crawl wave at N pinned CPUs vs 4N, fresh JVM each,
+    with N a quarter of the available CPUs. Big single wave + 4x corpus
+    because scaling efficiency is only meaningful when the data plane
+    dominates per-wave fixed costs — the regime a 100 TB crawl runs in.
     """
     scale = int(os.environ.get("NEWSCRAWL_SCALING_SCALE", scale * 4))
     # "Two cluster sizes" is emulated as two CPU allocations, enforced
-    # with taskset: the N leg is pinned to 8 physical CPUs, the 4N leg
-    # gets all 32. Pinning matters because a local[N] JVM with
-    # Python-UDF stages uses far more than N cores (N task threads + N
-    # Python workers + GC/IO threads), so unpinned local[N] vs local[4N]
-    # does not compare 1:4 resources.
-    pair = ((8, "0-7"), (32, "0-31"))
+    # with taskset: the N leg is pinned to N CPUs, the 4N leg to 4N.
+    # Pinning matters because a local[N] JVM with Python-UDF stages uses
+    # far more than N cores (N task threads + N Python workers + GC/IO
+    # threads), so unpinned local[N] vs local[4N] does not compare 1:4
+    # resources.
+    ids = available_cpus()
+    if len(ids) < 4:
+        raise SystemExit(f"--scaling needs >= 4 CPUs, this process has {len(ids)}")
+    lo = len(ids) // 4
+    pair = tuple(
+        (n, ",".join(str(c) for c in ids[:n])) for n in (lo, 4 * lo)
+    )
     results = {}
     residue = {}
     for cpus, cpuset in pair:
@@ -736,7 +782,7 @@ def scaling_report(sf_dir: str, scale: int) -> None:
             "same crawl job (identical corpus, identical waves) at two\n"
             "parallelism levels with fresh JVMs (no real cluster available).\n"
             "The two sizes are enforced as CPU allocations with taskset —\n"
-            "8 CPUs (N) vs 32 CPUs (4N) — because an unpinned local[N] JVM\n"
+            f"{lo} CPUs (N) vs {hi} CPUs (4N) — because an unpinned local[N] JVM\n"
             "with Python-UDF stages uses far more than N cores. Each leg is\n"
             "best-of-2 (the shared virtual disk injects multi-x interference\n"
             "into single runs).\n\n"
@@ -754,7 +800,7 @@ def scaling_report(sf_dir: str, scale: int) -> None:
             "(fetch + extract + classify + every state table committed —\n"
             "includes the per-wave serial residue: snapshot commits and\n"
             "parquet state writes against ONE shared virtual disk whose\n"
-            "bandwidth is identical at 8 and 32 CPUs, plus constant driver\n"
+            f"bandwidth is identical at {lo} and {hi} CPUs, plus constant driver\n"
             "orchestration seconds per wave.)\n\n"
             "| parallelism | pages | urls | wall sec | urls/sec |\n"
             "|---|---|---|---|---|\n"
@@ -798,7 +844,7 @@ def scaling_report(sf_dir: str, scale: int) -> None:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(available_cpus())))
     scale = int(os.environ.get("NEWSCRAWL_BENCH_SCALE", "1"))
     if "--scaling" in sys.argv:
         scaling_report(sf_dir, scale)

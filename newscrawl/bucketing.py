@@ -11,7 +11,9 @@ frontier. Verified by tests/test_plans.py::test_bucketed_fetch_join_has_no_excha
 
 Bucket count is the knob that fixes per-task memory at any total size:
 10^10 urls / 2^14 buckets ~ 600k urls per bucket regardless of cluster
-shape.
+shape. It is chosen once, when the pages table is written; the wave
+reads it back from that table's catalog spec (``bucket_count``), so the
+candidate side always matches it.
 """
 
 from __future__ import annotations
@@ -31,6 +33,22 @@ def write_bucketed(
         .format("parquet")
         .saveAsTable(table)
     )
+
+
+def bucket_count(spark: SparkSession, table: str) -> int:
+    """The bucket count of ``table``'s catalog spec. Raises ValueError
+    unless the table is bucketed on url alone — any other spec would
+    plan an Exchange on the pages side of the fetch join."""
+    spec = {
+        r.col_name: r.data_type
+        for r in spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
+    }
+    if spec.get("Bucket Columns") != "[`url`]":
+        raise ValueError(
+            f"{table} is not bucketed on 'url' "
+            f"(bucket columns: {spec.get('Bucket Columns')})"
+        )
+    return int(spec["Num Buckets"])
 
 
 def bucketed_fetch(

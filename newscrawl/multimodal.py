@@ -114,6 +114,8 @@ def decode_png(payload: bytes) -> "numpy.ndarray":  # noqa: F821
         if plte is None:
             raise ValueError("palette PNG without PLTE")
         palette = np.frombuffer(plte, np.uint8).reshape(-1, 3)
+        if px.size and int(px.max()) >= len(palette):
+            raise ValueError("PNG palette index past the PLTE entries")
         px = palette[px[:, :, 0]]
     return px
 
@@ -265,12 +267,19 @@ def _fallback_features(payload: bytes | None) -> tuple:
     return len(b), sha[:16], width, height, 0, True, 0, 0
 
 
+# the decoders' failure surface on malformed bytes, not just the
+# declared stubs: a truncated IDAT raises zlib.error and a short chunk
+# struct.error, neither a ValueError (tests/test_functions_multimodal.py
+# fuzzes every truncation and single-byte mutation of valid payloads)
+_DECODE_ERRORS = (ValueError, NotImplementedError, zlib.error, struct.error, EOFError)
+
+
 def extract_media_features(batch_iter: Iterator["pandas.DataFrame"]) -> Iterator["pandas.DataFrame"]:  # noqa: F821
     """mapInPandas kernel: payload binary -> typed feature columns.
 
     Tries the real decoder per media_type (PNG and WAV decode for
-    real; other formats raise); on NotImplementedError/ValueError falls
-    back to the deterministic feature extractor. Payload is dropped on
+    real; other formats raise); on a decode failure (``_DECODE_ERRORS``)
+    falls back to the deterministic feature extractor. Payload is dropped on
     output (same never-move-raw-bytes rule as html extraction).
     """
     for pdf in batch_iter:
@@ -310,12 +319,10 @@ def extract_media_features(batch_iter: Iterator["pandas.DataFrame"]) -> Iterator
                     )
                     continue
                 feats.append(_fallback_features(payload))
-            except Exception:
-                # the FULL decode failure surface, not just the declared
-                # stubs: a truncated IDAT raises zlib.error, a short fmt
-                # chunk raises struct.error, and neither subclasses
-                # ValueError — malformed crawled bytes must degrade to
-                # the fallback features, never kill the wave (ADVICE r6)
+            except _DECODE_ERRORS:
+                # malformed crawled bytes degrade to the fallback
+                # features, never kill the wave (ADVICE r6); any other
+                # exception is a decoder bug and propagates
                 feats.append(_fallback_features(payload))
         out = pdf.drop(columns=["payload"]).reset_index(drop=True)
         out[

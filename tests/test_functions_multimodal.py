@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import hashlib
 import hmac as hmac_mod
+import struct
+import zlib
 
 import pytest
 
@@ -314,3 +316,108 @@ def test_media_features_real_wav_and_resize_noop(spark):
     assert not wav_row.needs_resize
     fb = out[2]
     assert fb.channels == 0 and (fb.sample_rate, fb.n_samples) == (0, 0)
+
+
+def _malformed_variants(good: bytes):
+    """Every prefix truncation and every single-byte mutation (four
+    replacement values per position) of a valid payload."""
+    for i in range(len(good)):
+        yield good[:i]
+    for i in range(len(good)):
+        for v in (0x00, 0xFF, good[i] ^ 0x01, good[i] ^ 0x80):
+            b = bytearray(good)
+            b[i] = v
+            yield bytes(b)
+
+
+def _kernel_features(mtype: str, payloads: list, batch: int = 512) -> list:
+    """Run the media kernel on the driver over pandas batches (no Spark)
+    and return one feature tuple per payload."""
+    import pandas as pd
+
+    batches = (
+        pd.DataFrame(
+            {
+                "media_id": range(i, i + len(payloads[i : i + batch])),
+                "payload": payloads[i : i + batch],
+                "media_type": mtype,
+            }
+        )
+        for i in range(0, len(payloads), batch)
+    )
+    cols = ["n_bytes", "sha256_16", "width", "height", "channels", "decode_ok",
+            "sample_rate", "n_samples"]
+    return [
+        tuple(r)
+        for out in mm.extract_media_features(batches)
+        for r in out[cols].itertuples(index=False)
+    ]
+
+
+def _palette_png(n_entries: int, indices) -> bytes:
+    """A colour-type-3 PNG (depth 8, filter 0) with an ``n_entries``-entry
+    PLTE and the given (h, w) pixel indices."""
+    import numpy as np
+
+    idx = np.asarray(indices, np.uint8)
+    h, w = idx.shape
+
+    def chunk(typ: bytes, body: bytes) -> bytes:
+        return (
+            struct.pack(">I", len(body)) + typ + body
+            + struct.pack(">I", zlib.crc32(typ + body))
+        )
+
+    raw = b"".join(b"\x00" + row.tobytes() for row in idx)
+    return (
+        mm.PNG_MAGIC
+        + chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 3, 0, 0, 0))
+        + chunk(b"PLTE", bytes(range(3 * n_entries)))
+        + chunk(b"IDAT", zlib.compress(raw))
+        + chunk(b"IEND", b"")
+    )
+
+
+def test_media_kernel_degrades_malformed_payloads_to_fallback():
+    """Truncated or corrupted PNG/WAV bytes never raise out of the kernel:
+    each either still decodes for real (a byte the format does not check,
+    e.g. a sample or a CRC) or yields exactly the fallback features. A
+    palette PNG whose pixel indices run past its PLTE is malformed too."""
+    import numpy as np
+
+    png = np.zeros((24, 31, 3), dtype=np.uint8)
+    png[:, :, 0] = 200
+    ramp = np.arange(6 * 9).reshape(6, 9) % 4
+    short_plte = _palette_png(1, ramp)
+    assert _kernel_features("image", [short_plte]) == [mm._fallback_features(short_plte)]
+    fixtures = [
+        ("image", mm.encode_png(png)),
+        ("image", _palette_png(4, ramp)),
+        ("audio", mm.encode_wav(np.zeros((2000, 2), dtype=np.float32), 16000)),
+    ]
+    for mtype, good in fixtures:
+        payloads = list(_malformed_variants(good))
+        feats = _kernel_features(mtype, payloads)
+        assert len(feats) == len(payloads)
+        n_fallback = 0
+        for payload, got in zip(payloads, feats):
+            if got[4] == 0:  # channels 0 = pseudo features
+                assert got == mm._fallback_features(payload)
+                n_fallback += 1
+            else:
+                assert got[5] and got[0] == len(payload)
+        # every truncation that cuts a header chunk is undecodable
+        assert n_fallback > 40, (mtype, n_fallback)
+
+
+def test_media_kernel_propagates_decoder_bugs(monkeypatch):
+    """Only the decoders' malformed-input errors fall back: a bug inside
+    a decoder (here an AttributeError) propagates out of the kernel."""
+    import numpy as np
+
+    def broken(payload):
+        raise AttributeError("decoder bug")
+
+    monkeypatch.setattr(mm, "decode_image", broken)
+    with pytest.raises(AttributeError):
+        _kernel_features("image", [mm.encode_png(np.zeros((4, 4, 3), np.uint8))])

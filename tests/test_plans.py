@@ -130,9 +130,7 @@ def test_bucketed_wave_equals_broadcast_wave(spark, tmp_path):
     cat_b = ManifestParquetCatalog(str(tmp_path / "broadcast"))
     wave.run_crawl(spark, cat_b, cfg, pages=pages)
     cat_k = ManifestParquetCatalog(str(tmp_path / "bucketed"))
-    wave.run_crawl(
-        spark, cat_k, cfg, pages_table="t_pages_bucketed", fetch_buckets=8
-    )
+    wave.run_crawl(spark, cat_k, cfg, pages_table="t_pages_bucketed")
 
     assert wave.crawl_order(spark, cat_b) == wave.crawl_order(spark, cat_k)
     key = lambda r: (r.url, r.wave_id, r.fingerprint, r.topic)

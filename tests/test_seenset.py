@@ -155,8 +155,7 @@ def test_spill_tier_covers_recent_waves_and_bloom_lags(spark, tmp_path):
     cat = ManifestParquetCatalog(str(tmp_path / "sp"))
     wave.run_crawl(spark, cat, cfg, n_waves=3)
 
-    bloom = wave._load_bloom(spark, cat)
-    spill = wave._load_spill(spark, cat)
+    bloom, spill, _ = wave._load_seen_filters(cat)
     assert spill is not None and spill.filters
     # spill window = waves (last - SPILL_WAVES, last]
     waves_in_spill = sorted({wi for wi, _s in spill.filters.keys()})
@@ -191,8 +190,7 @@ def test_rollback_removes_rolled_back_waves_from_accelerator(spark, tmp_path):
 
     post_w0 = cat.snapshot_ids()[1]
     cat.rollback(post_w0)
-    bloom = wave._load_bloom(spark, cat)
-    spill = wave._load_spill(spark, cat)
+    bloom, spill, _ = wave._load_seen_filters(cat)
     assert bloom is None  # nothing has left the spill window by wave 0
     assert sorted({wi for wi, _s in spill.filters.keys()}) == [0]
 

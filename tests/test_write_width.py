@@ -1,9 +1,9 @@
 """Manifest-stats-derived write width (VERDICT round 3, item 4).
 
 The per-wave delta writes must size their file count from estimated bytes
-(rows x observed bytes/row from the catalog manifest) / target file size —
-so a much bigger wave writes more files and file sizes stay near the
-target, instead of a constant cores//4 fan-in at every wave size.
+(rows x observed bytes/row from the catalog manifest) / the minimum file
+size — so a much bigger wave writes more files, instead of a constant
+cores//4 fan-in at every wave size.
 """
 
 from __future__ import annotations
@@ -19,9 +19,9 @@ def test_file_count_tracks_rows_written(spark, tmp_path, monkeypatch):
     # since the r6 fusion: its write runs INSIDE the extract job, so
     # its width is a PRE-execution estimate from the frontier size —
     # a streaming sink cannot know its output size beforehand.)
-    # tiny target (4 KiB) so wave-size differences show up at test scale
-    # without both waves clamping at the cores ceiling
-    monkeypatch.setenv("NEWSCRAWL_TARGET_FILE_MB", "0.004")
+    # tiny min file size (4 KiB) so wave-size differences show up at
+    # test scale without both waves clamping at the cores ceiling
+    monkeypatch.setattr(wave, "_MIN_FILE_BYTES", 4 << 10)
     cfg = synth.SynthConfig(n_seed=2, n_total=40, n_waves=3)
     cat = ManifestParquetCatalog(str(tmp_path / "w"))
     wave.run_crawl(spark, cat, cfg, n_waves=3, webhook_key=b"k")
@@ -50,13 +50,12 @@ def test_file_count_tracks_rows_written(spark, tmp_path, monkeypatch):
     assert files_by_wave[big] > files_by_wave[small], (rows_ix, files_by_wave)
 
 
-def test_write_width_clamps_small_deltas_to_one_file(spark, tmp_path, monkeypatch):
-    """A delta smaller than one target file writes exactly ONE file —
+def test_write_width_clamps_small_deltas_to_one_file(spark, tmp_path):
+    """A delta smaller than one min-size file writes exactly ONE file —
     EVERY wave, including wave 0 (no manifest stats yet, estimate from
     the conservative bytes/row fallback). Multi-file writes of KB-scale
     state deltas are pure task-scheduling overhead that gets WORSE with
     more cores (the r5 inverse-scaling residue)."""
-    monkeypatch.setenv("NEWSCRAWL_TARGET_FILE_MB", "1024")  # huge target
     cfg = synth.SynthConfig(n_seed=2, n_total=16, n_waves=2)
     cat = ManifestParquetCatalog(str(tmp_path / "c"))
     wave.run_crawl(spark, cat, cfg, n_waves=2)
